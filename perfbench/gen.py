@@ -4,12 +4,14 @@ Everything the program under test receives is generated here from the
 ``--seed`` argument: the reference-shaped raw zone (products, orders,
 order_items CSV with the FIXTURES.md dirty-row cases D1-D9), the
 incremental "days" (new orders, D10 re-sent keys, dirty rows, FK
-orphans) and a TPC-H-like star schema in the testdata layout. Alongside the inputs the generator returns the counts
-and the final table state the program must produce, computed by a plain
-Python model of the reference semantics (reject a row when a required
+orphans), a TPC-H-like star schema in the testdata layout and a documents
+table for the curation job. Alongside the inputs the generator returns the
+counts and the final table state the program must produce, computed by a
+plain Python model of the reference semantics (reject a row when a required
 column is null after the cast; keep the smallest row per primary key;
 drop rows whose foreign keys have no target; MERGE replaces matched
-rows). Same seed, same bytes.
+rows), and the curation job's counts for the cases it plants. Same seed,
+same bytes.
 """
 
 from __future__ import annotations
@@ -474,3 +476,100 @@ def write_star_schema(root: str, seed: int, sf: float) -> dict[str, int]:
     for name, df in tables.items():
         df.to_parquet(f"{root}/{name}.parquet", index=False)
     return {name: len(df) for name, df in tables.items()}
+
+
+# --- curation corpus (documents-table layout) --------------------------------
+
+_SYLLABLES = ("ba", "ce", "di", "fo", "gu", "ha", "ke", "li", "mo", "nu",
+              "pa", "re", "si", "to", "vu", "xa", "ye", "zo", "qi", "wu")
+_VOCAB = tuple(a + b + c for a in _SYLLABLES for b in _SYLLABLES
+               for c in ("", "n", "r"))
+DOC_SOURCES = 8
+EVAL_MOD, EVAL_REM = 50, 17  # doc_id % 50 == 17 is the held-out eval split
+CTX_TOKENS = 64
+
+
+@dataclass
+class CurationExpect:
+    """The ``CurationResult`` counts ``run_curation_job`` must report."""
+
+    n_input: int
+    n_gated_out: int
+    n_exact_dups: int
+    n_near_dups: int
+    n_contaminated: int
+    n_curated: int
+    n_packs: int
+
+
+def write_documents(path: str, seed: int, n_docs: int) -> CurationExpect:
+    """A documents table (``doc_id, text, lang, source, n_chars``) of
+    ``n_docs`` rows with planted cases, and the curation job's expected
+    counts over the training split (``doc_id % 50 != 17``) with the
+    eval split as the contamination reference.
+
+    Unique documents are 45-80 words drawn from a 1,200-word vocabulary, so
+    they pass the quality gate and no two share a 3-gram set by chance.
+    Planted in the training split: short (< 100 chars) and one-word-spam
+    documents that fail the gate, exact copies (dropped by exact dedup),
+    near copies with one appended word (one dropped per verified MinHash
+    pair) and copies of eval documents (dropped by decontamination)."""
+    import pandas as pd
+
+    rng = random.Random(seed)
+
+    def words(lo: int, hi: int) -> list[str]:
+        return [rng.choice(_VOCAB) for _ in range(rng.randrange(lo, hi + 1))]
+
+    ids = list(range(n_docs))
+    eval_ids = [i for i in ids if i % EVAL_MOD == EVAL_REM]
+    train_ids = [i for i in ids if i % EVAL_MOD != EVAL_REM]
+    rng.shuffle(train_ids)
+    text: dict[int, str] = {i: " ".join(words(45, 80)) for i in eval_ids}
+    n_case = max(1, len(train_ids) // 25)
+    kinds = (["short"] * n_case + ["spam"] * n_case + ["exact"] * n_case
+             + ["near"] * n_case + ["contaminated"] * min(n_case, len(eval_ids)))
+    planted = dict(zip(train_ids, kinds))
+    plain = [i for i in train_ids if i not in planted]
+    for i in plain:
+        text[i] = " ".join(words(45, 80))
+    originals = iter(plain)
+    evals = iter(eval_ids)
+    # the document that survives in each planted group: min doc_id keeps
+    survivor_of: dict[int, int] = {}
+    for i, kind in planted.items():
+        if kind == "short":
+            text[i] = " ".join(words(3, 8))
+        elif kind == "spam":
+            text[i] = " ".join([rng.choice(_VOCAB)] * rng.randrange(60, 90))
+        elif kind in ("exact", "near"):
+            o = next(originals)
+            text[i] = text[o] + ("" if kind == "exact" else " " + rng.choice(_VOCAB))
+            survivor_of[o] = survivor_of[i] = min(o, i)
+        else:
+            text[i] = text[next(evals)]
+    source = {i: f"src{rng.randrange(DOC_SOURCES)}" for i in ids}
+    curated = [i for i in train_ids
+               if planted.get(i) not in ("short", "spam", "contaminated")
+               and survivor_of.get(i, i) == i]
+    tokens: dict[str, int] = {}
+    for i in curated:
+        tokens[source[i]] = tokens.get(source[i], 0) + len(text[i].split(" "))
+    os.makedirs(os.path.dirname(path), exist_ok=True)
+    pd.DataFrame({
+        "doc_id": pd.Series(ids, dtype="int64"),
+        "text": [text[i] for i in ids],
+        "lang": "en",
+        "source": [source[i] for i in ids],
+        "n_chars": pd.Series([len(text[i]) for i in ids], dtype="int64"),
+    }).to_parquet(path, index=False)
+    count = kinds.count
+    return CurationExpect(
+        n_input=len(train_ids),
+        n_gated_out=count("short") + count("spam"),
+        n_exact_dups=count("exact"),
+        n_near_dups=count("near"),
+        n_contaminated=count("contaminated"),
+        n_curated=len(curated),
+        n_packs=sum(-(-t // CTX_TOKENS) for t in tokens.values()),
+    )

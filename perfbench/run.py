@@ -34,7 +34,7 @@ ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
 
 from perfbench import spec  # noqa: E402
-from perfbench.stats import failed_frac, median, ratio  # noqa: E402
+from perfbench.stats import failed_frac, median  # noqa: E402
 from perfbench.trace import PKG, Tracer, layer_metrics  # noqa: E402
 
 # An operation slower than this counts as failed (timed out).
@@ -56,19 +56,6 @@ def host_anchor() -> float:
             h.update(buf)
         rng = random.Random(7)
         sorted(rng.random() for _ in range(150_000))
-        best = min(best, time.perf_counter() - t0)
-    return best
-
-
-def jvm_anchor(spark) -> float:
-    """The same on the JVM, which the Python leg does not see slow down: a
-    fixed Spark job (hash-aggregate of a generated range), best of five.
-    Informational only."""
-    best = float("inf")
-    for _ in range(5):
-        t0 = time.perf_counter()
-        spark.range(0, 2_000_000, numPartitions=4).selectExpr(
-            "xxhash64(id) % 512 AS b").groupBy("b").count().collect()
         best = min(best, time.perf_counter() - t0)
     return best
 
@@ -118,12 +105,14 @@ def measure(wl, tracer: Tracer, seconds: float, min_ops: int, traced: bool,
             deadline: float, max_ops: int | None = None):
     """Closed loop, one client: run whole rounds of ``wl.round_len``
     operations until ``seconds`` have passed and ``min_ops`` are done (or
-    ``max_ops`` are). In a traced run every second round is traced, the
-    others measure the untraced baseline. Returns [(op, traced)]."""
+    ``max_ops`` are). A traced run orders its rounds untraced, traced,
+    traced, untraced (repeating), so a warm-up trend over the run falls on
+    both sides of the tracing-overhead comparison alike; the untraced
+    rounds measure the baseline. Returns [(op, traced)]."""
     from perfbench.workloads import Op
 
-    if traced:  # at least one untraced and one traced round
-        min_ops = max(min_ops, 2 * wl.round_len)
+    if traced:  # at least one untraced-traced-traced-untraced cycle
+        min_ops = max(min_ops, 4 * wl.round_len)
     done = []
     t_start = time.perf_counter()
     i = 0
@@ -134,7 +123,7 @@ def measure(wl, tracer: Tracer, seconds: float, min_ops: int, traced: bool,
             or (max_ops is not None and i >= max_ops)
         ):
             break
-        on = traced and (i // wl.round_len) % 2 == 1
+        on = traced and (i // wl.round_len) % 4 in (1, 2)
         tracer.active = on
         t0 = time.perf_counter()
         try:
@@ -170,7 +159,6 @@ def run_workload(name: str, seed: int, seconds: float, trace: bool) -> int:
     os.environ["TMPDIR"] = f"{work}/tmp"
     os.environ["SPARK_LOCAL_DIRS"] = f"{work}/spark-local"
     os.environ.setdefault("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
-    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "2g")
     import tempfile
 
     tempfile.tempdir = f"{work}/tmp"
@@ -180,31 +168,35 @@ def run_workload(name: str, seed: int, seconds: float, trace: bool) -> int:
     spark = None
     try:
         t0 = time.perf_counter()
+        # a traced run also spans the set-up (it holds the initial load and
+        # the curation job on ingest_incremental); setup_s is untraced-only
         tracer.active = trace
         with tracer.span("session", "get_spark"):
             spark = start_spark(work)
-        tracer.active = False
         tracer.flush()
         tracer.attach(spark)
         t_session = time.perf_counter()
         wl = WORKLOADS[name](spark, work, seed, tracer)
         wl.setup()
+        tracer.active = False
         t_warm = time.perf_counter()
         problems = wl.warmup()
         setup_s = time.perf_counter() - t0
-        warmup_s = time.perf_counter() - t_warm
         print(f"perfbench: set-up {setup_s:.2f} s = session {t_session - t0:.2f}"
-              f" + inputs/base {t_warm - t_session:.2f} + warm-up {warmup_s:.2f}",
-              file=sys.stderr)
-        jvm_start = jvm_anchor(spark)
+              f" + inputs/base {t_warm - t_session:.2f}"
+              f" + warm-up {time.perf_counter() - t_warm:.2f}", file=sys.stderr)
         done = measure(wl, tracer, seconds, spec.MIN_OPS[name], trace,
                        t_begin + DEADLINE_S, spec.MAX_OPS.get(name))
-        jvm_end = jvm_anchor(spark)
+        figures = {}
+        if trace:
+            figures["tracing.overhead_frac"], late = wl.overhead(done)
+            problems += late
         problems += wl.finish()
         rss = peak_rss_mb(spark)
         base = [op for op, on in done if not on and not op.problems] or [
             op for op, _ in done]
-        figures = wl.figures(base) if trace else {}
+        if trace:
+            figures.update(wl.figures(base))
     finally:
         if spark is not None:
             stop_spark(spark)
@@ -215,8 +207,7 @@ def run_workload(name: str, seed: int, seconds: float, trace: bool) -> int:
             pass
     anchor_end = host_anchor()
     print(f"perfbench: host anchor {anchor_start:.4f} s at start, "
-          f"{anchor_end:.4f} s at end; JVM anchor {jvm_start:.4f} s before "
-          f"measuring, {jvm_end:.4f} s after", file=sys.stderr)
+          f"{anchor_end:.4f} s at end", file=sys.stderr)
 
     failed = [op for op, _ in done if op.problems]
     for op in failed:
@@ -227,22 +218,15 @@ def run_workload(name: str, seed: int, seconds: float, trace: bool) -> int:
     e2e = {"op_s_p50": (median(secs), "s"), "setup_s": (setup_s, "s")}
     samples = {"op_s_p50": len(secs), "setup_s": 1}
     if trace:
-        traced = [op for op, on in done if on]
         units = {m["name"]: m["unit"] for m in spec.per_layer()}
         values = dict.fromkeys(units, 0.0)
         values.update(layer_metrics(tracer.spans))
         values.update(figures)
         values.update({
             "run.failed_frac": failed_frac(len(done), len(failed)),
-            "run.warmup_s": warmup_s,
             "run.peak_rss_mb": rss,
             "host.anchor_start_s": anchor_start,
             "host.anchor_end_s": anchor_end,
-            "host.jvm_anchor_start_s": jvm_start,
-            "host.jvm_anchor_end_s": jvm_end,
-            "tracing.overhead_frac": ratio(
-                median([op.seconds for op in traced]), median(secs)) - 1.0
-            if traced else 0.0,
         })
         metrics = {k: (float(values[k]), units[k]) for k in units}
         samples = {}

@@ -85,6 +85,22 @@ def test_star_schema_is_deterministic(tmp_path):
                                       pd.read_parquet(tmp_path / "b" / f"{t}.parquet"))
 
 
+def test_documents_are_deterministic_and_accounted(tmp_path):
+    import pandas as pd
+
+    a = gen.write_documents(str(tmp_path / "a.parquet"), 4, 500)
+    b = gen.write_documents(str(tmp_path / "b.parquet"), 4, 500)
+    c = gen.write_documents(str(tmp_path / "c.parquet"), 5, 500)
+    da, db = (pd.read_parquet(tmp_path / f"{x}.parquet") for x in "ab")
+    pd.testing.assert_frame_equal(da, db)
+    assert a == b and a != c
+    assert a.n_input == len(da) - (da.doc_id % gen.EVAL_MOD == gen.EVAL_REM).sum()
+    assert a.n_input == (a.n_gated_out + a.n_exact_dups + a.n_near_dups
+                         + a.n_contaminated + a.n_curated)
+    assert min(a.n_gated_out, a.n_exact_dups, a.n_near_dups, a.n_contaminated) > 0
+    assert (da.n_chars == da.text.str.len()).all()
+
+
 def test_percentile_and_ratio_helpers():
     xs = [4.0, 1.0, 3.0, 2.0]
     assert percentile(xs, 50) == 2.5 == statistics.median(xs)
@@ -117,10 +133,13 @@ def test_injected_failures_count_in_failed_frac():
     assert failed_frac(len(done), len(failed)) == 0.5
 
 
-def test_traced_runs_alternate_rounds():
+def test_traced_runs_balance_rounds():
     done = measure(_FlakyWorkload(-5), Tracer(), seconds=0.0, min_ops=1,
                    traced=True, deadline=float("inf"))
-    assert [on for _, on in done] == [False, True]
+    assert [on for _, on in done] == [False, True, True, False]
+    capped = measure(_FlakyWorkload(-5), Tracer(), seconds=0.0, min_ops=1,
+                     traced=True, deadline=float("inf"), max_ops=2)
+    assert [on for _, on in capped] == [False, True]
 
 
 def test_self_time_excludes_children():

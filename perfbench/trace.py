@@ -7,10 +7,10 @@ are wrapped in the namespaces their calling modules resolve them from
 changes.
 
 Each span gets its own Spark job group, so a job is attributed to the
-innermost span that was open when it ran. After each traced operation the
-stage metrics of the new spans' jobs are read from Spark's status API on
-localhost, long before UI retention could drop them. Spans stay in memory;
-the caller aggregates them once at the end.
+innermost span that was open when it ran. After each traced operation (and
+each phase of a traced set-up) the stage metrics of the new spans' jobs are
+read from Spark's status API on localhost, long before UI retention could
+drop them. Spans stay in memory; the caller aggregates them once at the end.
 """
 
 from __future__ import annotations
@@ -96,9 +96,9 @@ class Tracer:
 
     def flush(self) -> None:
         """Attach Spark job metrics to the spans closed since the last flush.
-        Called after every traced operation: an operation runs far fewer
-        stages than the UI retains (1000), so nothing is dropped, and one
-        status-API read per operation keeps the tracer cheap."""
+        Called after every traced operation and set-up phase: each runs far
+        fewer stages than the UI retains (1000), so nothing is dropped, and
+        one status-API read per call keeps the tracer cheap."""
         spans, self._pending = self._pending, []
         if self._sc is None or not self._api or not spans:
             return
@@ -152,38 +152,66 @@ class _Facade:
         return getattr(self._module, name)
 
 
-@contextmanager
-def instrument(tracer: Tracer):
-    """Wrap the public calls ``etl.jobs`` makes into each layer (only while
-    the tracer is active: untraced runs execute the package untouched)."""
+def _patches(tracer: Tracer) -> list[tuple[object, dict]]:
+    """(module, {attribute: spanned replacement}) for every public call the
+    benchmark spans inside the package, as each calling module resolves
+    it: ``etl.orchestrator`` -> ``run_etl_job``; ``etl.jobs`` -> each
+    layer of a job; ``etl.datapipe`` -> MinHash-LSH, components and the
+    snapshot commit of the curation job."""
     import importlib
 
+    def mod(name):
+        return importlib.import_module(f"{PKG}.{name}")
+
+    orch, jobs, pipe = mod("etl.orchestrator"), mod("etl.jobs"), mod("etl.datapipe")
+    w = tracer.wrap
+    return [
+        (orch, {"run_etl_job": w("etl.jobs", orch.run_etl_job)}),
+        (jobs, {
+            "read_csv": w("sources.csv", jobs.read_csv),
+            "write_rejects": w("sources.rejects", jobs.write_rejects),
+            "V": _Facade(jobs.V, {"validate": w("operators.validation",
+                                                jobs.V.validate)}),
+            "D": _Facade(jobs.D, {"dedup_deterministic": w(
+                "operators.dedup", jobs.D.dedup_deterministic)}),
+            "J": _Facade(jobs.J, {"fk_check": w("operators.joins", jobs.J.fk_check)}),
+            "M": _Facade(jobs.M, {"merge_upsert": w("operators.merge",
+                                                    jobs.M.merge_upsert)}),
+            "S": _Facade(jobs.S, {
+                "merge_commit": w("sources.snapshots", jobs.S.merge_commit),
+                "read": w("sources.snapshots", jobs.S.read)}),
+        }),
+        (pipe, {
+            "TD": _Facade(pipe.TD, {
+                "shingle_arrays": w("operators.textdedup", pipe.TD.shingle_arrays),
+                "minhash_dedup_verified": w("operators.textdedup",
+                                            pipe.TD.minhash_dedup_verified)}),
+            "G": _Facade(pipe.G, {"dedup_clusters": w("operators.graph",
+                                                      pipe.G.dedup_clusters)}),
+            "S": _Facade(pipe.S, {"commit": w("sources.snapshots", pipe.S.commit),
+                                  "read": w("sources.snapshots", pipe.S.read)}),
+        }),
+    ]
+
+
+@contextmanager
+def instrument(tracer: Tracer):
+    """Span the package's inner public calls (only while the tracer is
+    active: untraced runs execute the package untouched)."""
     if not tracer.active:
         yield
         return
-
-    jobs = importlib.import_module(f"{PKG}.etl.jobs")
-    plan = {
-        "read_csv": tracer.wrap("sources.csv", jobs.read_csv),
-        "write_rejects": tracer.wrap("sources.rejects", jobs.write_rejects),
-        "V": _Facade(jobs.V, {"validate": tracer.wrap(
-            "operators.validation", jobs.V.validate)}),
-        "D": _Facade(jobs.D, {"dedup_deterministic": tracer.wrap(
-            "operators.dedup", jobs.D.dedup_deterministic)}),
-        "J": _Facade(jobs.J, {"fk_check": tracer.wrap(
-            "operators.joins", jobs.J.fk_check)}),
-        "S": _Facade(jobs.S, {
-            "merge_commit": tracer.wrap("sources.snapshots", jobs.S.merge_commit),
-            "read": tracer.wrap("sources.snapshots", jobs.S.read)}),
-    }
-    saved = {k: getattr(jobs, k) for k in plan}
-    for k, v in plan.items():
-        setattr(jobs, k, v)
+    saved = []
+    for module, plan in _patches(tracer):
+        saved.append((module, {k: getattr(module, k) for k in plan}))
+        for k, v in plan.items():
+            setattr(module, k, v)
     try:
         yield
     finally:
-        for k, v in saved.items():
-            setattr(jobs, k, v)
+        for module, attrs in saved:
+            for k, v in attrs.items():
+                setattr(module, k, v)
 
 
 def layer_metrics(spans: list[Span]) -> dict[str, float]:

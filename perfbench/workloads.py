@@ -34,16 +34,30 @@ def dir_bytes(path: str) -> tuple[int, int]:
     return n, size
 
 
+def parquet_files(path: str) -> tuple[int, int]:
+    """(data files, their bytes) under ``path``."""
+    n = size = 0
+    for root, _, files in os.walk(path):
+        for f in files:
+            if f.endswith(".parquet"):
+                n += 1
+                size += os.path.getsize(os.path.join(root, f))
+    return n, size
+
+
 def _expect(problems: list[str], what: str, got, want) -> None:
     if got != want:
         problems.append(f"{what}: got {got}, expected {want}")
 
 
 class IngestIncremental:
-    """Snapshot base tables built from the raw zone, then one day per
-    operation: orders and order_items through ``run_etl_job(use_snapshots=
-    True)``, followed by the reference's validation reads on the fresh
-    snapshots."""
+    """The lakehouse's write side. Set-up: the initial load of a generated
+    raw zone through ``etl.orchestrator.run_pipeline`` (plain tables via
+    ``merge_upsert``), its curated tables published as the snapshot base,
+    and one ``etl.datapipe.run_curation_job`` pass over a generated
+    corpus. Then one day per operation: orders and order_items through
+    ``run_etl_job(use_snapshots=True)``, followed by the reference's
+    validation reads on the fresh snapshots."""
 
     name = "ingest_incremental"
     round_len = 1
@@ -53,6 +67,8 @@ class IngestIncremental:
 
         self.spark, self.work, self.seed, self.tracer = spark, work, seed, tracer
         self.jobs = importlib.import_module(f"{PKG}.etl.jobs")
+        self.orch = importlib.import_module(f"{PKG}.etl.orchestrator")
+        self.pipe = importlib.import_module(f"{PKG}.etl.datapipe")
         self.S = importlib.import_module(f"{PKG}.sources.snapshots")
         self.tables = importlib.import_module(f"{PKG}.tables")
         self.size = spec.SIZES[self.name]
@@ -60,6 +76,7 @@ class IngestIncremental:
         self.rej = f"{work}/rejected"
         self.counters: dict[str, float] = {}
         self.rows: dict[str, int] = {}  # table row counts after the last job
+        self.setup_figures: dict[str, float] = {}
 
     def _path(self, table: str) -> str:
         return f"{self.wh}/{table}"
@@ -80,30 +97,90 @@ class IngestIncremental:
         _expect(problems, f"{res.table}.rows_written", res.rows_written, exp.written)
 
     def setup(self) -> None:
+        problems = self._initial_load() + self._curation()
+        self.tracer.results.clear()
+        if problems:
+            raise RuntimeError("set-up: " + "; ".join(problems))
+
+    def _initial_load(self) -> list[str]:
+        """``run_pipeline`` (archive off, one attempt) into a plain
+        warehouse, checked against the generator's model; then each curated
+        table is published as a snapshot table by ``merge_commit``."""
+        from pyspark.sql import functions as F
+
         s = self.size
         zone, self.state = gen.write_raw_zone(
             f"{self.work}/raw", self.seed, s["base_products"], s["base_days"],
             s["base_orders_per_day"])
-        T = self.tables
+        plain = f"{self.work}/initial"
+        notes: list[tuple[str, str]] = []
+        cfg = self.orch.PipelineConfig(
+            raw_path=f"{self.work}/raw", warehouse_path=plain,
+            rejected_path=f"{self.work}/initial_rejected",
+            archive_path=f"{self.work}/archive",
+            retry=self.orch.RetryPolicy(attempts=1),
+            notifier=lambda status, msg: notes.append((status, msg)))
+        run = self.tracer.wrap("etl.orchestrator", self.orch.run_pipeline)
+        with instrument(self.tracer):
+            t0 = time.perf_counter()
+            results = run(self.spark, cfg, "initial", archive=False)
+            load_s = time.perf_counter() - t0
+        self.tracer.flush()
         problems: list[str] = []
+        _expect(problems, "pipeline notification", [n[0] for n in notes], ["success"])
+        T = self.tables
+        publish = self.tracer.wrap("sources.snapshots", self.S.merge_commit)
         for sp in (T.PRODUCTS, T.ORDERS, T.ORDER_ITEMS):
-            refs = self._refs() if sp.foreign_keys else None
-            res = self._job(sp, zone.files[sp.name], "base", refs)
-            self._check_job(problems, res, zone.expect[sp.name])
-            self.rows[sp.name] = res.rows_written
-        if problems:
-            raise RuntimeError("base build: " + "; ".join(problems))
+            self._check_job(problems, results[sp.name], zone.expect[sp.name])
+            self.rows[sp.name] = results[sp.name].rows_written
+            df = self.spark.read.parquet(f"{plain}/{sp.name}").select(
+                *[F.col(f.name).cast(f.dataType) for f in sp.schema.fields])
+            publish(self.spark, df, self._path(sp.name), sp, check_source_unique=False)
+        self.tracer.flush()
+        written = [parquet_files(f"{plain}/{t}") for t in ("products", "orders",
+                                                             "order_items")]
+        self.setup_figures.update({
+            "ingest_incremental.ingest_rows_per_s": ratio(zone.raw_rows, load_s),
+            "operators.merge.files_written": sum(n for n, _ in written),
+            "operators.merge.bytes_written": sum(b for _, b in written),
+        })
+        return problems
+
+    def _curation(self) -> list[str]:
+        """One curation pass over the generated corpus; every count of the
+        ``CurationResult`` must equal the generator's."""
+        from pyspark.sql import functions as F
+
+        path = f"{self.work}/documents.parquet"
+        exp = gen.write_documents(path, self.seed, self.size["documents"])
+        docs = self.spark.read.parquet(path)
+        split = F.col("doc_id") % gen.EVAL_MOD == gen.EVAL_REM
+        run = self.tracer.wrap("etl.datapipe", self.pipe.run_curation_job)
+        with instrument(self.tracer):
+            t0 = time.perf_counter()
+            res = run(self.spark, docs.filter(~split), f"{self.work}/corpus",
+                      ctx_tokens=gen.CTX_TOKENS, eval_docs=docs.filter(split),
+                      contamination_max=0.5, contamination_ngram=3)
+            curate_s = time.perf_counter() - t0
+        self.tracer.flush()
+        problems: list[str] = []
+        for k, want in vars(exp).items():
+            _expect(problems, f"curation {k}", getattr(res, k), want)
+        self.setup_figures["ingest_incremental.curation_docs_per_s"] = ratio(
+            res.n_input, curate_s)
+        return problems
 
     def warmup(self) -> list[str]:
-        """The base build already ran every layer of a day (the create path
-        of the same jobs); a day after it is only ~15% slower than the next,
-        so there is no separate warm-up day."""
+        """The set-up already ran every layer of a day (the same jobs on the
+        plain path, ``merge_commit`` on its create path), so there is no
+        separate warm-up day."""
         return []
 
     def op(self, i: int) -> Op:
         s = self.size
         day = gen.write_day(f"{self.work}/landing", self.seed, self.state,
                             s["day_orders"], s["day_resent_keys"])
+        self.last_date = day.date
         before = dir_bytes(self.wh)[1] + dir_bytes(self.rej)[1]
         T = self.tables
         run_id = f"day{i + 1}"
@@ -194,6 +271,24 @@ class IngestIncremental:
             add("parts_changed", m.get("num_partitions_changed", 0))
             add("reject_files", sum(dir_bytes(p)[0] for p in res.reject_paths))
 
+    def overhead(self, done) -> tuple[float, list[str]]:
+        """Traced over untraced time, minus one, of the same work: the last
+        day's validation reads, repeated on the final (unchanging) tables
+        untraced, traced, traced, untraced. The two measured days differ
+        (warm-up, one more commit), so they cannot be compared."""
+        date = self.last_date
+        secs: dict[bool, list[float]] = {False: [], True: []}
+        problems: list[str] = []
+        for on in (False, True, True, False):
+            self.tracer.active = on
+            t0 = time.perf_counter()
+            reads = self._fresh_reads(date)
+            secs[on].append(time.perf_counter() - t0)
+            self.tracer.active = False
+            self.tracer.flush()
+            self._check_reads(problems, reads, date)
+        return ratio(median(secs[True]), median(secs[False])) - 1.0, problems
+
     def finish(self) -> list[str]:
         """The curated tables must equal the model's final state."""
         problems = []
@@ -207,11 +302,9 @@ class IngestIncremental:
 
     def figures(self, ops: list[Op]) -> dict[str, float]:
         c = self.counters
-        live = 0
-        for t in ("products", "orders", "order_items"):
-            for e in self.S.load_snapshot(self._path(t)).part_entries or []:
-                d = e["dir"].removeprefix("file:")
-                live += sum(1 for f in os.listdir(d) if f.endswith(".parquet"))
+        live = sum(parquet_files(e["dir"].removeprefix("file:"))[0]
+                   for t in ("products", "orders", "order_items")
+                   for e in self.S.load_snapshot(self._path(t)).part_entries or [])
         batch = [o.seconds for o in ops]
         return {
             "ingest_incremental.batch_s_p50": median(batch),
@@ -231,6 +324,7 @@ class IngestIncremental:
                 c["parts_changed"], c["commits"]),
             "sources.snapshots.live_files_end": live,
             "sources.rejects.files_written": c["reject_files"],
+            **self.setup_figures,
         }
 
 
@@ -256,12 +350,16 @@ class QueryMix:
             self.sf, list(n), {q: self.catalog.CATALOG[q].oracle for q in self.order})
 
     def warmup(self) -> list[str]:
-        """One untimed round, which compiles every plan shape (2-3x slower
-        than the next round)."""
-        problems: list[str] = []
-        for i in range(self.round_len):
-            problems += self.op(i).problems
-        return problems
+        """One untimed, checked round, which compiles every plan shape (2-3x
+        slower than the next round). Its queries run on four threads: plan
+        building and code generation happen on the calling thread, so this
+        takes less than half the time of a serial round, and the caches it
+        fills are the same."""
+        from concurrent.futures import ThreadPoolExecutor
+
+        with ThreadPoolExecutor(4) as pool:
+            ops = list(pool.map(self.op, range(self.round_len)))
+        return [p for op in ops for p in op.problems]
 
     def op(self, i: int) -> Op:
         name = self.order[i % len(self.order)]
@@ -277,6 +375,15 @@ class QueryMix:
         if checks.result_hash(df.columns, [tuple(r) for r in rows]) != self.oracle[name]:
             problems.append(f"{name}: result hash differs from the oracle")
         return Op(t2 - t0, 1, problems, {"build_s": t1 - t0, "exec_s": t2 - t1})
+
+    def overhead(self, done) -> tuple[float, list[str]]:
+        """Median traced query over median untraced query, minus one: both
+        sides hold the same queries, and the rounds' untraced, traced,
+        traced, untraced order balances the warm-up trend."""
+        def med(on):
+            return median([op.seconds for op, o in done if o == on])
+
+        return ratio(med(True), med(False)) - 1.0, []
 
     def finish(self) -> list[str]:
         return []
