@@ -121,13 +121,14 @@ def run_pipeline(
     spark: SparkSession, cfg: PipelineConfig, run_id: str, archive: bool = True
 ) -> dict[str, JobResult]:
     """The full state machine, sequentially (O1); FK ordering invariant:
-    products and orders land before order_items probes them."""
+    products and orders land before the order_items job reads them back
+    from the warehouse as its FK targets."""
     results: dict[str, JobResult] = {}
     try:
         if not data_available(cfg):
             raise FileNotFoundError("raw data not available for all three datasets")
 
-        for spec in (PRODUCTS, ORDERS):
+        for spec in (PRODUCTS, ORDERS, ORDER_ITEMS):
             results[spec.name] = cfg.retry.run(
                 lambda s=spec: run_etl_job(
                     spark,
@@ -139,23 +140,6 @@ def run_pipeline(
                 ),
                 spec.name,
             )
-
-        refs = {
-            "orders": spark.read.parquet(f"{cfg.warehouse_path}/orders"),
-            "products": spark.read.parquet(f"{cfg.warehouse_path}/products"),
-        }
-        results["order_items"] = cfg.retry.run(
-            lambda: run_etl_job(
-                spark,
-                ORDER_ITEMS,
-                f"{cfg.raw_path}/order_items/*.csv",
-                cfg.warehouse_path,
-                cfg.rejected_path,
-                run_id,
-                ref_tables=refs,
-            ),
-            "order_items",
-        )
 
         if archive:
             archive_raw(cfg, run_id)

@@ -3,9 +3,12 @@
 The reference's rejected/ zone is write-only — nothing ever reads it
 (SURVEY.md §2.1 S6). A real lakehouse closes the loop: read a quarantined
 batch, apply a caller-supplied fix (corrected mapping, default fill,
-re-parsed timestamps), re-run the SAME validation the main path uses, merge
-the now-valid rows, and re-quarantine the still-bad remainder under a new
-run id. MERGE idempotence makes replay safe to repeat.
+re-parsed timestamps) and run it through the SAME raw→curated hop as the
+batch jobs and the stream (``etl.jobs.ingest_batch``): validation, dedup,
+the same foreign-key checks, and a MERGE in the table's existing format
+(a snapshot table gets a new snapshot version). Still-bad rows and FK
+orphans are re-quarantined under the replay's run id. MERGE idempotence
+makes replay safe to repeat.
 """
 
 from __future__ import annotations
@@ -14,17 +17,11 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-from _lakehouse_architecture_for_e_commerce_transactions_spark.operators import (
-    dedup as D,
-)
-from _lakehouse_architecture_for_e_commerce_transactions_spark.operators import (
-    merge as M,
+from _lakehouse_architecture_for_e_commerce_transactions_spark.etl.jobs import (
+    ingest_batch,
 )
 from _lakehouse_architecture_for_e_commerce_transactions_spark.operators import (
     validation as V,
-)
-from _lakehouse_architecture_for_e_commerce_transactions_spark.sources.rejects import (
-    write_rejects,
 )
 from _lakehouse_architecture_for_e_commerce_transactions_spark.tables import TableSpec
 
@@ -49,19 +46,16 @@ def replay_rejects(
     replay_run_id: str,
     fixer: Callable[[DataFrame], DataFrame] | None = None,
 ) -> tuple[int, int]:
-    """Returns (rows recovered into the table, rows re-quarantined)."""
+    """Returns (rows recovered into the table, rows re-quarantined): the
+    ``rows_merged`` and ``rows_rejected`` of the replay's ``JobResult`` —
+    recovered rows count once per primary key; re-quarantined rows are
+    validation rejects plus FK orphans."""
     raw = read_rejects(spark, rejected_path, spec.name, source_run_id).drop(
         V.REASON_COL
     )
     if fixer is not None:
         raw = fixer(raw)
-    res = V.validate(raw, spec)
-    valid = D.dedup_deterministic(res.valid, [spec.primary_key])
-    n_ok = valid.count()
-    if n_ok:
-        M.merge_upsert(spark, valid, f"{warehouse_path}/{spec.name}", spec)
-    n_bad = res.rejected.count()
-    if n_bad:
-        write_rejects(res.rejected, rejected_path, spec.name, replay_run_id)
-    res.unpersist()
-    return n_ok, n_bad
+    res = ingest_batch(
+        spark, spec, raw, warehouse_path, rejected_path, replay_run_id
+    )
+    return res.rows_merged, res.rows_rejected

@@ -19,10 +19,9 @@ Delta MERGE has:
    files are never rewritten — the moral equivalent of Delta rewriting only
    files containing matches.
 
-Durability note: parquet overwrite is not ACID; a production deployment at
-100 TB swaps this writer for Delta/Iceberg via the same interface (an
-import-try picks Delta automatically when present). Semantics and plan shape
-are identical.
+Durability note: parquet overwrite is not ACID. The ACID form of the same
+upsert is ``sources.snapshots.merge_commit`` (same ``merge_plan``, published
+as an atomic snapshot version).
 
 Like Delta MERGE (which throws on duplicate source keys — SURVEY.md §7.3),
 the source must be deduplicated by PK first; ``check_source_unique=True``
@@ -36,21 +35,14 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from _lakehouse_architecture_for_e_commerce_transactions_spark.operators import (
+    dedup as D,
+)
 from _lakehouse_architecture_for_e_commerce_transactions_spark.tables import TableSpec
-
-try:  # optional ACID path when delta-spark is installed
-    from delta.tables import DeltaTable  # type: ignore
-
-    _HAS_DELTA = True
-except Exception:  # pragma: no cover - environment without delta
-    DeltaTable = None
-    _HAS_DELTA = False
 
 
 def table_exists(spark: SparkSession, path: str) -> bool:
-    """Existence probe (parity with ``DeltaTable.isDeltaTable``, S5)."""
-    if _HAS_DELTA and DeltaTable.isDeltaTable(spark, path):
-        return True
+    """Existence probe (the reference's create-if-absent check, S5)."""
     if not os.path.isdir(path):
         return False
     for root, _dirs, files in os.walk(path):
@@ -151,6 +143,16 @@ def _cluster_for_write(df: DataFrame, partition_by) -> DataFrame:
     return df.hint("rebalance", *list(partition_by))
 
 
+def require_unique_keys(source: DataFrame, spec: TableSpec) -> None:
+    """Raise if ``source`` holds a primary key twice — MERGE needs one
+    source row per key (Delta MERGE throws on the same input)."""
+    if D.duplicate_keys(source, [spec.primary_key]).limit(1).count() > 0:
+        raise ValueError(
+            f"merge source has duplicate {spec.primary_key!r} keys; "
+            "dedup before merge"
+        )
+
+
 def _delete_path(spark: SparkSession, path: str) -> None:
     """Filesystem-agnostic recursive delete via the Hadoop FileSystem API
     (works for file://, s3a://, hdfs:// alike)."""
@@ -179,40 +181,18 @@ def merge_upsert(
     cols = [f.name for f in spec.schema.fields]
     source = source.select(*cols)
     if check_source_unique:
-        pk = spec.primary_key
-        dup = (
-            source.groupBy(pk).agg(F.count(F.lit(1)).alias("c")).filter(F.col("c") > 1)
-        )
-        if dup.limit(1).count() > 0:
-            raise ValueError(
-                f"merge source has duplicate {pk!r} keys; dedup before merge"
-            )
+        require_unique_keys(source, spec)
 
-    if _HAS_DELTA and DeltaTable.isDeltaTable(spark, path):
-        (
-            DeltaTable.forPath(spark, path)
-            .alias("target")
-            .merge(
-                source.alias("source"),
-                f"target.{spec.primary_key} = source.{spec.primary_key}",
-            )
-            .whenMatchedUpdateAll()
-            .whenNotMatchedInsertAll()
-            .execute()
-        )
-        return
-
-    writer_fmt = "delta" if _HAS_DELTA else "parquet"
     if not table_exists(spark, path):
         if spec.partition_by:
             source = _cluster_for_write(source, spec.partition_by)
-        w = source.write.format(writer_fmt).mode("overwrite")
+        w = source.write.mode("overwrite")
         if spec.partition_by:
             w = w.partitionBy(*spec.partition_by)
-        w.save(path)
+        w.parquet(path)
         return
 
-    target = spark.read.format(writer_fmt).load(path)
+    target = spark.read.parquet(path)
     missing_in_target = [c for c in cols if c not in target.columns]
     extra_in_target = [c for c in target.columns if c not in cols]
     if missing_in_target or extra_in_target:
@@ -251,9 +231,9 @@ def merge_upsert(
         pass
     if spec.partition_by:
         merged = _cluster_for_write(merged, spec.partition_by)
-    w = merged.write.format(writer_fmt).mode("overwrite")
+    w = merged.write.mode("overwrite")
     if spec.partition_by:
         w = w.partitionBy(*spec.partition_by)
-    w.save(path)
+    w.parquet(path)
     for d in stale_dirs:
         _delete_path(spark, d)

@@ -42,11 +42,21 @@ class ValidationResult:
     rejected: DataFrame  # schema columns + _reject_reason
     observation: Observation | None = None
     _cached: DataFrame | None = None
+    _flagged: DataFrame | None = None  # the batch with its reason column
 
     def metrics(self) -> dict:
         """Materialized per-rule counts; available after an action has run
         over ``valid``/``rejected`` (observe-based, costs no extra scan)."""
         return dict(self.observation.get) if self.observation is not None else {}
+
+    def counts(self) -> tuple[int, int]:
+        """(rows in, rows rejected) in one job. Unlike ``metrics()`` it
+        holds when the first plan over ``valid`` is proved empty: AQE
+        then drops the observed subtree and reports an empty row."""
+        row = self._flagged.agg(
+            F.count(F.lit(1)).alias("n"), F.count(REASON_COL).alias("rejected")
+        ).first()
+        return row["n"], row["rejected"]
 
     def unpersist(self) -> None:
         """Release the shared cached intermediate — call once both outputs
@@ -133,5 +143,9 @@ def validate(
     valid = flagged.filter(F.col(REASON_COL).isNull()).drop(REASON_COL)
     rejected = flagged.filter(F.col(REASON_COL).isNotNull())
     return ValidationResult(
-        valid=valid, rejected=rejected, observation=obs, _cached=cached
+        valid=valid,
+        rejected=rejected,
+        observation=obs,
+        _cached=cached,
+        _flagged=flagged,
     )

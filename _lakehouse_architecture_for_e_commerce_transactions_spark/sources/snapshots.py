@@ -1860,17 +1860,7 @@ def merge_commit(
     cols = [f.name for f in spec.schema.fields]
     source = source.select(*cols)
     if check_source_unique:
-        from pyspark.sql import functions as F
-
-        dup = (
-            source.groupBy(spec.primary_key)
-            .agg(F.count(F.lit(1)).alias("c"))
-            .filter(F.col("c") > 1)
-        )
-        if dup.limit(1).count() > 0:
-            raise ValueError(
-                f"merge source has duplicate {spec.primary_key!r} keys"
-            )
+        M.require_unique_keys(source, spec)
     parts = list(spec.partition_by)
     if not parts:
         # unpartitioned: the merge result IS the next full snapshot.

@@ -187,11 +187,20 @@ def _stats_watermark(path: str, spark=None, report: dict | None = None):
         return int(best_b), best_a
     if spark is None:
         return None, None  # caller can't scan here: legacy behavior
-    dv_dead = snap.dv_dead or {}
-    if any(dv_dead.get(f) for f in statless):
+    if snap.dv_files:
         # tombstoned rows in a statless file: the raw scan below would
-        # read through them, so use the DV-aware full fallback instead
-        return None, None
+        # read through them, so use the DV-aware full fallback instead.
+        # dv_dead is keyed by _metadata.file_path URIs ('file:/...'),
+        # data_files by disk paths; None means the dead counts are
+        # unreadable, so any statless file may hold tombstones.
+        if snap.dv_dead is None:
+            return None, None
+        statless_set = set(statless)
+        if any(
+            n and S._strip_file_scheme(f) in statless_set
+            for f, n in snap.dv_dead.items()
+        ):
+            return None, None
     from pyspark.sql.types import StructField, StructType
 
     mapping = S._mapping(snap)

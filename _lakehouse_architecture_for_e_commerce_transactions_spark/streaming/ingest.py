@@ -3,10 +3,11 @@ Spark-native (SURVEY.md §2.9).
 
 Reference: S3 ObjectCreated → SQS → availability Lambda → Step Functions →
 batch Glue jobs. Rebuild: a file-source stream discovers new CSVs per
-micro-batch; ``foreachBatch`` applies the same validate→dedup→merge pipeline
-with exactly-once bookkeeping from the checkpoint (replaces SQS redelivery),
-and ``Trigger.AvailableNow`` reproduces the batch-per-arrival semantics of
-the availability gate.
+micro-batch; ``foreachBatch`` hands each micro-batch to the batch jobs'
+raw→curated hop (``etl.jobs.ingest_batch``: validation, dedup, the same
+foreign-key checks, MERGE, quarantine) with exactly-once bookkeeping from
+the checkpoint (replaces SQS redelivery), and ``Trigger.AvailableNow``
+reproduces the batch-per-arrival semantics of the availability gate.
 
 At scale: file listing is incremental (``maxFilesPerTrigger`` bounds batch
 size), state is only the file log (no aggregation state), and MERGE
@@ -20,17 +21,8 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
-from _lakehouse_architecture_for_e_commerce_transactions_spark.operators import (
-    dedup as D,
-)
-from _lakehouse_architecture_for_e_commerce_transactions_spark.operators import (
-    merge as M,
-)
-from _lakehouse_architecture_for_e_commerce_transactions_spark.operators import (
-    validation as V,
-)
-from _lakehouse_architecture_for_e_commerce_transactions_spark.sources.rejects import (
-    write_rejects,
+from _lakehouse_architecture_for_e_commerce_transactions_spark.etl.jobs import (
+    ingest_batch,
 )
 from _lakehouse_architecture_for_e_commerce_transactions_spark.tables import TableSpec
 
@@ -50,7 +42,10 @@ def stream_ingest(
     """Stream raw CSVs from ``raw_dir`` into the curated table.
 
     ``on_batch(batch_id, n_valid, n_rejected)`` is an observability hook
-    (the SNS-notification slot in the reference). ``use_snapshots=True``
+    (the SNS-notification slot in the reference): ``n_valid`` is the
+    batch's ``JobResult.rows_merged`` (rows upserted, once per primary
+    key), ``n_rejected`` its ``rows_rejected`` (validation rejects plus FK
+    orphans, quarantined under run id ``batch_<id>``). ``use_snapshots=True``
     publishes each micro-batch's MERGE as an atomic snapshot version
     (sources/snapshots.py) — an exactly-once, time-travelable streaming
     sink: readers never see a half-written batch, and each batch id maps
@@ -64,27 +59,13 @@ def stream_ingest(
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     stream = reader.csv(raw_dir)
 
-    table_path = f"{warehouse_path}/{spec.name}"
-
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        res = V.validate(batch_df, spec, cache=True)
-        valid = D.dedup_deterministic(res.valid, [spec.primary_key])
-        if use_snapshots:
-            from _lakehouse_architecture_for_e_commerce_transactions_spark.sources import (
-                snapshots as S,
-            )
-
-            S.merge_commit(spark, valid, table_path, spec)
-        else:
-            M.merge_upsert(spark, valid, table_path, spec)
-        n_rej = res.rejected.count()
-        if n_rej:
-            write_rejects(
-                res.rejected, rejected_path, spec.name, f"batch_{batch_id}"
-            )
+        res = ingest_batch(
+            spark, spec, batch_df, warehouse_path, rejected_path,
+            f"batch_{batch_id}", use_snapshots=use_snapshots,
+        )
         if on_batch is not None:
-            on_batch(batch_id, valid.count(), n_rej)
-        res.unpersist()  # bounded executor memory across micro-batches
+            on_batch(batch_id, res.rows_merged, res.rows_rejected)
 
     writer = (
         stream.writeStream.foreachBatch(process_batch)

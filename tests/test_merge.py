@@ -154,27 +154,6 @@ def test_partition_move_with_otherwise_untouched_old_partition(spark, tmp_path):
     assert len(rows) == 2  # no duplicate pk=1 left behind in partition a
 
 
-@pytest.mark.skipif(
-    not M._HAS_DELTA, reason="delta-spark not installed in this environment"
-)
-def test_merge_upsert_delta_acid_branch(spark, tmp_path):
-    """Exercises the DeltaTable MERGE branch merge_upsert auto-selects when
-    delta-spark is importable — skipped (not failing) until the package is
-    present, so the ACID path is covered the day the environment has it."""
-    path = str(tmp_path / "t_delta")
-    M.merge_upsert(spark, _df(spark, [(1, 1.0, "a"), (2, 2.0, "b")]), path, SPEC)
-    assert M.DeltaTable.isDeltaTable(spark, path)  # wrote delta, not parquet
-    M.merge_upsert(spark, _df(spark, [(1, 9.0, "a"), (3, 3.0, "c")]), path, SPEC)
-    got = {
-        r["pk"]: r["amt"]
-        for r in spark.read.format("delta").load(path).collect()
-    }
-    assert got == {1: 9.0, 2: 2.0, 3: 3.0}
-    # time travel: version 0 predates the second merge
-    v0 = spark.read.format("delta").option("versionAsOf", 0).load(path)
-    assert {r["pk"] for r in v0.collect()} == {1, 2}
-
-
 def test_apply_changes_last_writer_wins(spark):
     from _lakehouse_architecture_for_e_commerce_transactions_spark.operators.merge import (
         apply_changes,

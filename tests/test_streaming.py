@@ -60,6 +60,50 @@ def test_stream_ingest_incremental_upsert(spark, tmp_path):
     assert got == {101: 99.0, 102: 20.0, 103: 40.0}
 
 
+def test_stream_ingest_checks_foreign_keys(spark, tmp_path):
+    """Micro-batches run the batch jobs' FK checks: the fixture's two
+    order_items orphans are quarantined under ``order_items_fk``, not
+    merged. ``on_batch`` reports rows merged (once per primary key: the
+    orders file's duplicated order 105 counts once) and rows rejected
+    (validation rejects plus FK orphans)."""
+    from _lakehouse_architecture_for_e_commerce_transactions_spark.etl.jobs import (
+        run_etl_job,
+    )
+    from _lakehouse_architecture_for_e_commerce_transactions_spark.tables import (
+        ORDER_ITEMS,
+        PRODUCTS,
+    )
+    from tests.conftest import write_raw_zone
+
+    raw = str(tmp_path / "raw")
+    expected = write_raw_zone(raw)
+    wh, rej = str(tmp_path / "wh"), str(tmp_path / "rej")
+    run_etl_job(spark, PRODUCTS, f"{raw}/products/*.csv", wh, rej, "r1")
+
+    counts: dict[str, list[tuple[int, int]]] = {"orders": [], "order_items": []}
+    for spec in (ORDERS, ORDER_ITEMS):
+        q = stream_ingest(
+            spark, spec, f"{raw}/{spec.name}", wh, rej,
+            str(tmp_path / f"ckpt_{spec.name}"),
+            on_batch=lambda b, v, r, t=spec.name: counts[t].append((v, r)),
+        )
+        q.awaitTermination(120)
+
+    assert counts["orders"] == [(30, 2)]
+    items = expected["order_items"]
+    assert counts["order_items"] == [
+        (items["written"], items["rejected"] + items["orphans"])
+    ]
+    assert spark.read.parquet(f"{wh}/order_items").count() == items["written"]
+    orphans = spark.read.option("header", True).csv(
+        f"{rej}/order_items_fk/run_id=batch_0"
+    )
+    assert sorted(r["_reject_reason"] for r in orphans.collect()) == [
+        "fk_violation_order_id",
+        "fk_violation_product_id",
+    ]
+
+
 def test_windowed_event_counts_batch_and_stream_parity(spark, sf_dir):
     from _lakehouse_architecture_for_e_commerce_transactions_spark.tables import (
         load_table,

@@ -465,7 +465,7 @@ def test_compact_collapses_marker_rows_and_keeps_watermark(
 
 
 def test_stats_watermark_mixed_table_scans_statless_files_only(
-    spark, tmp_path
+    spark, tmp_path, monkeypatch
 ):
     """r15 (ADVICE r13 item 3): a table where only SOME files carry
     ``_last_batch``/``_app_id`` stats — e.g. a commit written outside
@@ -533,3 +533,20 @@ def test_stats_watermark_mixed_table_scans_statless_files_only(
     rep2: dict = {}
     assert _stats_watermark(p2, spark, report=rep2) == (3, "app")
     assert rep2["files_scanned"] == 0
+
+    # a deletion vector on the statless file: the raw scan would read
+    # the tombstoned batch-5 row, so the read must fall back to the
+    # DV-aware full scan, whose live max is 2
+    S.delete_where_dv(spark, path, "k = 'z'")
+    assert _stats_watermark(path, spark) == (None, None)
+    assert S.read(spark, path).agg({"_last_batch": "max"}).first()[0] == 2
+    # unreadable dead counts (dv_dead poisoned to None) fall back too
+    import dataclasses
+
+    load = S.load_snapshot
+    monkeypatch.setattr(
+        S,
+        "load_snapshot",
+        lambda *a, **k: dataclasses.replace(load(*a, **k), dv_dead=None),
+    )
+    assert _stats_watermark(path, spark) == (None, None)
